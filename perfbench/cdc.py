@@ -22,10 +22,9 @@ import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from gen import DAY_US, T0_US, WORKLOAD_SPECS, CdcSpec, arrival_name, cdc_arrivals, write_parquet
+from gen import DAY_US, T0_US, WORKLOAD_SPECS, arrival_name, cdc_arrivals, write_parquet
 
 SPEC = WORKLOAD_SPECS["cdc_medallion"]
-WARMUP_SPEC = CdcSpec(arrivals=2, rows=100)
 INITIAL_WM = datetime.datetime(2023, 12, 31)
 INITIAL_WM_US = T0_US - DAY_US
 DIMS = (
@@ -272,7 +271,10 @@ def check_gold(lake_gold: Path, landing: Path, n_arrivals: int) -> dict:
 # -- workload entry points ---------------------------------------------------------
 
 def warmup(spark, work: Path, seed: int, tracer) -> None:
-    arrivals, _ = cdc_arrivals(seed + 1_000_003, WARMUP_SPEC)
+    """One full-size cycle from another seed. Batch times keep falling over
+    the first cycles (JIT); a small cycle leaves the measured one still
+    warming, and its median then depends on when compilation lands."""
+    arrivals, _ = cdc_arrivals(seed + 1_000_003, SPEC)
     root = work / "warmup-cdc"
     run_cycle(spark, arrivals, root, tracer, None)
     shutil.rmtree(root, ignore_errors=True)

@@ -7,10 +7,10 @@ runs the curation chain:
 - plain run: the registry queries ``corpus_curation`` (text filters, exact
   dedup, MinHash-LSH, connected components) and ``ann_ivf_index_persisted``
   (IVF build -> persist -> probe), each collected as one fused plan;
-- traced run: the same work composed from the operators stage by stage,
-  each stage forced on its own (cached and written to the ``noop`` sink,
-  or the stage's own write), so its time and Spark counters belong to one
-  layer. It also probes the index for the top 10 of a query window, for
+- traced run: the same registry queries, with each operator they call
+  wrapped so that its result is cached and forced on its own (``noop``
+  sink) inside a span, so its time and Spark counters belong to one layer.
+  It then probes the persisted index for the top 10 of a query window, for
   recall against brute force, and scores near-duplicate recall.
 
 Every pass is checked against the registry's DuckDB ``ORACLE`` SQL over the
@@ -20,6 +20,10 @@ takes 10-30 s, more than a run can spend on its check.
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import importlib
+import inspect
 import shutil
 import statistics
 import time
@@ -32,10 +36,12 @@ from gen import WORKLOAD_SPECS, CurationSpec, write_curation
 SPEC = WORKLOAD_SPECS["llm_curation"]
 WARMUP_SPEC = CurationSpec(docs=60, vectors=80, queries=10, query_lo=20)
 REGISTRY = ("corpus_curation", "ann_ivf_index_persisted")
-IVF_NLIST, IVF_NPROBE, ANN_K = 8, 2, 10
-# One fused pass takes about this long on 4 cores at the seed; it sets how
-# many passes fill a run of the requested length.
-NOMINAL_PASS_S = 8.5
+ANN_K = 10
+# One warm fused pass takes about this long on 4 cores at the seed; it sets
+# how many passes fill a run of the requested length. The first passes after
+# the warm-up are still getting faster (JIT), so a run needs three of them
+# for its median to sit on a warm one.
+NOMINAL_PASS_S = 4.0
 
 
 # -- plain pass: the fused registry chain ------------------------------------------
@@ -50,79 +56,97 @@ def fused_pass(spark, data: Path) -> dict:
     return out
 
 
-# -- traced pass: the same chain, one forced stage per span -------------------------
+# -- traced pass: the same registry chain, one forced stage per span ------------------
 
-def staged_pass(spark, data: Path, spec: CurationSpec, tracer, work: Path) -> dict:
-    """The registry chain rebuilt from operators, each stage forced and
-    cached before the next consumes it. Returns the same results as
-    ``fused_pass`` plus per-stage counts."""
-    from pyspark.sql import Observation
+# The operator functions the two registry queries call, with the span each
+# call is recorded under. ``plans.queries`` looks them up on their modules
+# at call time, so replacing the module attribute traces the registry's own
+# chain. ``centroid_codebook`` is reached through the registry's codebook
+# memo, which misses on every pass (each pass reads a fresh directory).
+TRACED_CALLS = (
+    ("text", "quality_score", "text.filter"),
+    ("text", "gopher_repetition_filter", "text.filter"),
+    ("dedup", "exact_dedup", "dedup.exact"),
+    ("dedup", "lsh_candidate_pairs", "dedup.lsh"),
+    ("dedup", "duplicate_clusters", "dedup.cc"),
+    ("similarity", "centroid_codebook", "similarity.ivf_build"),
+    ("similarity", "ivf_index_build", "similarity.ivf_build"),
+    ("similarity", "ivf_index_upsert", "similarity.ivf_persist"),
+    ("similarity", "ivf_index_probe", "similarity.ivf_probe"),
+)
+
+
+@contextlib.contextmanager
+def traced_operators(tracer, calls: dict):
+    """Trace every call in ``TRACED_CALLS`` for the duration of the block.
+
+    A span covers the call and, when it returns a DataFrame, that
+    DataFrame cached and forced through the ``noop`` sink, so the stage's
+    jobs run inside its own span and the registry's next stage reads the
+    cache. ``calls`` receives each function's last (arguments by name,
+    result)."""
+    from pyspark.sql import DataFrame
+
+    patched, cached = [], []
+
+    def traced(fn, span: str):
+        @functools.wraps(fn)
+        def call(*args, **kwargs):
+            with tracer.span(span, span.split(".")[0], call=fn.__name__):
+                out = fn(*args, **kwargs)
+                if isinstance(out, DataFrame):
+                    out = out.cache()
+                    cached.append(out)
+                    out.write.format("noop").mode("overwrite").save()
+            bound = inspect.signature(fn).bind(*args, **kwargs)
+            bound.apply_defaults()
+            calls[fn.__name__] = (bound.arguments, out)
+            return out
+
+        return call
+
+    try:
+        for module, name, span in TRACED_CALLS:
+            mod = importlib.import_module(f"incremental_data_pipeline_spark.operators.{module}")
+            patched.append((mod, name, getattr(mod, name)))
+            setattr(mod, name, traced(getattr(mod, name), span))
+        yield
+    finally:
+        for mod, name, fn in patched:
+            setattr(mod, name, fn)
+        for df in cached:
+            df.unpersist()
+
+
+def staged_pass(spark, data: Path, spec: CurationSpec, tracer) -> dict:
+    """The registry queries with every operator stage traced. Returns the
+    same results as ``fused_pass`` plus what the per-layer metrics read
+    from the stages' outputs."""
     from pyspark.sql import functions as F
 
-    from incremental_data_pipeline_spark.operators import dedup, similarity as sim, text
+    from incremental_data_pipeline_spark.operators import similarity as sim
     from incremental_data_pipeline_spark.sources.readers import load_table
 
-    counts: dict[str, float] = {}
-    cached = []
+    calls: dict[str, tuple] = {}
+    with traced_operators(tracer, calls):
+        out = fused_pass(spark, data)
+        missing = sorted({name for _, name, _ in TRACED_CALLS} - set(calls))
+        if missing:
+            raise RuntimeError(f"the registry queries no longer call {missing}; update TRACED_CALLS")
+        docs = calls["quality_score"][0]["df"]
+        surv = calls["exact_dedup"][0]["df"]
+        out["counts"] = {"docs_in": docs.count(), "docs_kept": surv.count()}
+        out["candidate_pairs"] = [tuple(r) for r in calls["lsh_candidate_pairs"][1].collect()]
+        out["clusters"] = [tuple(r) for r in calls["duplicate_clusters"][1].select("doc_id", "cluster_id").collect()]
 
-    def stage(df, name: str, layer: str, **observe):
-        obs = Observation() if observe else None
-        forced = df.observe(obs, *[e.alias(k) for k, e in observe.items()]) if obs else df
-        forced = forced.cache()
-        cached.append(forced)
-        with tracer.span(name, layer):
-            forced.write.format("noop").mode("overwrite").save()
-        if obs:
-            counts.update(obs.get)
-        return forced
-
-    docs = load_table(spark, str(data), "documents")
+    # Top 10 of the recall window from the index the registry query built.
+    probe = calls["ivf_index_probe"][0]
+    path, codebook, nprobe = probe["path"], probe["centroids"], probe["nprobe"]
     emb = load_table(spark, str(data), "embeddings")
-    out = {}
-
-    # corpus_curation, stage by stage
-    counts["docs_in"] = docs.count()
-    rep = text.gopher_repetition_filter(docs).select("doc_id", "keep")
-    surv = stage(
-        text.quality_score(docs)
-        .filter((F.col("lang") == "en") & (F.col("quality") >= 0.36))
-        .join(rep.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi")
-        .select(*docs.columns),
-        "text.filter", "text", docs_kept=F.count(F.lit(1)),
-    )
-    exact = stage(dedup.exact_dedup(surv, "text", "doc_id"), "dedup.exact", "dedup")
-    pairs = stage(dedup.lsh_candidate_pairs(exact, "doc_id", "text", 12, 3, 3), "dedup.lsh", "dedup")
-    with tracer.span("dedup.cc", "dedup"):
-        clusters = dedup.duplicate_clusters(exact.select("doc_id"), pairs, "doc_id")
-        canonical = exact.join(
-            clusters.filter(F.col("cluster_id") == F.col("doc_id")).select("doc_id"), "doc_id", "left_semi"
-        )
-        stats = canonical.groupBy("source").agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(F.split(F.col("text"), " "))).alias("total_tokens"),
-        ).select("source", "n_docs", F.col("total_tokens").cast("long").alias("total_tokens"))
-        out["corpus_curation"] = (stats.columns, [tuple(r) for r in stats.collect()])
-        out["clusters"] = [tuple(r) for r in clusters.select("doc_id", "cluster_id").collect()]
-    out["candidate_pairs"] = [tuple(r) for r in pairs.collect()]
-
-    # ann_ivf_index_persisted: build -> persist (upsert) -> probe
-    path = str(work / "ivf_index")
-    with tracer.span("similarity.ivf_build", "similarity"):
-        codebook = sim.centroid_codebook(emb, nlist=IVF_NLIST)
-        sim.ivf_index_build(emb.filter(F.col("vec_id") % 5 != 4), codebook, path)
-    with tracer.span("similarity.ivf_persist", "similarity"):
-        sim.ivf_index_upsert(spark, emb.filter(F.col("vec_id") % 5 == 4), codebook, path)
-    with tracer.span("similarity.ivf_probe", "similarity"):
-        q = emb.filter((F.col("vec_id") >= 40) & (F.col("vec_id") < 60))
-        probe = sim.ivf_index_probe(spark, path, q, codebook, k=3, nprobe=IVF_NPROBE)
-        out["ann_ivf_index_persisted"] = (probe.columns, [tuple(r) for r in probe.collect()])
-        q10 = emb.filter((F.col("vec_id") >= spec.query_lo) & (F.col("vec_id") < spec.query_lo + spec.queries))
-        top = sim.ivf_index_probe(spark, path, q10, codebook, k=ANN_K, nprobe=IVF_NPROBE)
-        out["ivf_top10"] = [tuple(r) for r in top.select("query_id", "neighbor_id").collect()]
-    out["scored_per_query"] = scored_per_query(path, codebook, emb, q10)
-    for df in cached:
-        df.unpersist()
-    out["counts"] = counts
+    q10 = emb.filter((F.col("vec_id") >= spec.query_lo) & (F.col("vec_id") < spec.query_lo + spec.queries))
+    top = sim.ivf_index_probe(spark, path, q10, codebook, k=ANN_K, nprobe=nprobe)
+    out["ivf_top10"] = [tuple(r) for r in top.select("query_id", "neighbor_id").collect()]
+    out["scored_per_query"] = scored_per_query(path, codebook, q10, nprobe)
     return out
 
 
@@ -191,7 +215,7 @@ def exact_top10(con, spec: CurationSpec) -> set[tuple[int, int]]:
     return set(rows)
 
 
-def scored_per_query(index: str, codebook, emb, queries) -> float:
+def scored_per_query(index: str, codebook, queries, nprobe: int) -> float:
     """Index rows a probe scores per query: the sizes of each query's
     ``nprobe`` best cells (ranked as the engine ranks them, by cosine to
     the quantized centroids), read from the persisted index layout."""
@@ -204,7 +228,7 @@ def scored_per_query(index: str, codebook, emb, queries) -> float:
     cent /= np.linalg.norm(cent, axis=1, keepdims=True)
     ids = [c for c, _ in codebook]
     q = np.array([r[0] for r in queries.select("embedding").collect()], dtype=float)
-    best = np.argsort(-(q @ cent.T), axis=1)[:, :IVF_NPROBE]
+    best = np.argsort(-(q @ cent.T), axis=1)[:, :nprobe]
     return float(np.mean([sum(size.get(ids[j], 0) for j in row) for row in best]))
 
 
@@ -260,7 +284,7 @@ def measure(spark, work: Path, seed: int, seconds: float, tracer, traced: bool) 
         data = _fresh_copy(src, work / f"pass-{i}")
         t0 = time.perf_counter()
         if traced and i > 0:
-            got = staged_pass(spark, data, SPEC, tracer, work / f"pass-{i}-scratch")
+            got = staged_pass(spark, data, SPEC, tracer)
         else:
             got = fused_pass(spark, data)
         wall = time.perf_counter() - t0
@@ -274,7 +298,6 @@ def measure(spark, work: Path, seed: int, seconds: float, tracer, traced: bool) 
         checks.append(mism)
         last = got
         shutil.rmtree(data, ignore_errors=True)
-        shutil.rmtree(work / f"pass-{i}-scratch", ignore_errors=True)
     quality = {}
     if traced:
         exact = exact_top10(con, SPEC)

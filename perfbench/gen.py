@@ -40,49 +40,69 @@ TIERS = ("free", "basic", "plus", "pro", "team")
 CHANNELS = ("web", "ios", "android", "email", "partner")
 
 
+# Fixed shape of every CDC arrival sequence (``cdc_medallion`` and
+# ``stream_cdc``): each arrival covers its own window of WINDOW_DAYS, events
+# come from USERS users, and each planted kind is an exact share of the
+# arrival's new rows. Late rows lie at least LATE_MARGIN_H hours below the
+# previous window's start.
+WINDOW_DAYS = 2
+USERS = 300
+REPLAY_SHARE = 0.04
+TIED_SHARE = 0.02
+LATE_SHARE = 0.03
+UPDATE_SHARE = 0.05
+LATE_MARGIN_H = 6
+
+# Fixed shape of the curation corpus (``llm_curation``): planted exact and
+# near-duplicate documents and near-duplicate vectors as shares of the base
+# counts; base vectors of DIM components drawn around CLUSTERS centres.
+EXACT_DUP_SHARE = 0.05
+NEAR_DUP_SHARE = 0.10
+NEAR_DUP_VEC_SHARE = 0.05
+CLUSTERS = 12
+DIM = 64
+
+
 @dataclass(frozen=True)
 class CdcSpec:
-    """Shape of a CDC arrival sequence (``cdc_medallion`` and ``stream_cdc``).
+    """Size of a CDC arrival sequence.
 
     Arrival k carries ``rows`` new events whose ``ts`` falls in its own
-    window of ``window_days``, plus exact counts of four planted kinds:
-    replays (byte-identical copies of already generated rows, half from the
-    previous arrival and half from the same one), rows tied at the
-    watermark (``ts`` equal to the previous arrivals' maximum), late rows
-    (``ts`` at least ``late_margin_h`` hours below the previous window's
-    start) and attribute updates (a new tier for a user already seen, and
-    a new channel for one event type)."""
+    window, plus exact counts of four planted kinds: replays (byte-identical
+    copies of already generated rows, half from the previous arrival and
+    half from the same one), rows tied at the watermark (``ts`` equal to the
+    previous arrivals' maximum), late rows and attribute updates (a new tier
+    for a user already seen, and a new channel for one event type)."""
 
-    arrivals: int = 3
+    arrivals: int = 4
     rows: int = 1000
-    window_days: int = 2
-    users: int = 300
-    replay_share: float = 0.04
-    tied_share: float = 0.02
-    late_share: float = 0.03
-    update_share: float = 0.05
-    late_margin_h: int = 6
 
 
 @dataclass(frozen=True)
 class CurationSpec:
-    """Shape of the curation corpus (``llm_curation``).
+    """Size of the curation corpus.
 
     ``docs`` base documents, then exact copies and near duplicates (one or
     two token edits) of randomly chosen base documents; ``vectors`` base
-    embeddings drawn around ``clusters`` centres, plus near-duplicate
-    vectors (a base vector with small noise). Queries for the ANN probe are
-    the ``queries`` vectors starting at id ``query_lo``."""
+    embeddings plus near-duplicate vectors (a base vector with small
+    noise). Queries for the ANN recall probe are the ``queries`` vectors
+    starting at id ``query_lo``."""
 
     docs: int = 400
-    exact_dup_share: float = 0.05
-    near_dup_share: float = 0.10
     vectors: int = 600
-    near_dup_vec_share: float = 0.05
-    clusters: int = 12
-    dim: int = 64
     queries: int = 40
     query_lo: int = 100
+
+
+CDC_SHARES = {
+    "window_days": WINDOW_DAYS, "users": USERS, "replay_share": REPLAY_SHARE,
+    "tied_share": TIED_SHARE, "late_share": LATE_SHARE, "update_share": UPDATE_SHARE,
+    "late_margin_h": LATE_MARGIN_H,
+}
+CURATION_SHARES = {
+    "exact_dup_share": EXACT_DUP_SHARE, "near_dup_share": NEAR_DUP_SHARE,
+    "near_dup_vec_share": NEAR_DUP_VEC_SHARE, "clusters": CLUSTERS, "dim": DIM,
+}
 
 
 def _share(n: int, share: float) -> int:
@@ -99,10 +119,10 @@ def cdc_arrivals(seed: int, spec: CdcSpec) -> tuple[list[pa.Table], dict]:
     ``ts`` values are whole microseconds stored as nanoseconds, so the
     engine's ns -> us truncation neither creates nor breaks a tie."""
     rng = np.random.default_rng(seed)
-    tier = {u: TIERS[int(rng.integers(len(TIERS)))] for u in range(spec.users)}
+    tier = {u: TIERS[int(rng.integers(len(TIERS)))] for u in range(USERS)}
     channel = {e: CHANNELS[i % len(CHANNELS)] for i, e in enumerate(EVENT_TYPES)}
     # Skewed user popularity: a few users carry most events.
-    weights = 1.0 / np.arange(1, spec.users + 1) ** 0.8
+    weights = 1.0 / np.arange(1, USERS + 1) ** 0.8
     weights /= weights.sum()
 
     next_id = 0
@@ -111,8 +131,8 @@ def cdc_arrivals(seed: int, spec: CdcSpec) -> tuple[list[pa.Table], dict]:
     max_ts = None  # max ts of all rows generated so far (the open-window watermark)
     tables, planted = [], []
     for k in range(spec.arrivals):
-        lo = T0_US + k * spec.window_days * DAY_US
-        hi = lo + spec.window_days * DAY_US
+        lo = T0_US + k * WINDOW_DAYS * DAY_US
+        hi = lo + WINDOW_DAYS * DAY_US
         rows: list[dict] = []
 
         def event(ts_us: int, user: int, etype: str) -> dict:
@@ -131,7 +151,7 @@ def cdc_arrivals(seed: int, spec: CdcSpec) -> tuple[list[pa.Table], dict]:
         kinds = {"new": 0, "replay": 0, "tied": 0, "late": 0, "update": 0}
         if k >= 1 and seen_users:
             # Updates first, so every later row of the user carries the new tier.
-            n_upd = _share(spec.rows, spec.update_share)
+            n_upd = _share(spec.rows, UPDATE_SHARE)
             old_users = sorted(seen_users)
             for u in rng.choice(old_users, size=min(n_upd, len(old_users)), replace=False):
                 u = int(u)
@@ -142,7 +162,7 @@ def cdc_arrivals(seed: int, spec: CdcSpec) -> tuple[list[pa.Table], dict]:
             channel[etype] = CHANNELS[(CHANNELS.index(channel[etype]) + 1) % len(CHANNELS)]
             rows.append(event(int(rng.integers(lo, hi)), old_users[0], etype))
             kinds["update"] += 1
-        users = rng.choice(spec.users, size=spec.rows, p=weights)
+        users = rng.choice(USERS, size=spec.rows, p=weights)
         types = rng.integers(len(EVENT_TYPES), size=spec.rows)
         ts = rng.integers(lo, hi, size=spec.rows)
         for t, u, e in zip(ts, users, types):
@@ -150,18 +170,18 @@ def cdc_arrivals(seed: int, spec: CdcSpec) -> tuple[list[pa.Table], dict]:
             kinds["new"] += 1
         if k >= 1:
             old_users = sorted(seen_users)
-            for _ in range(_share(spec.rows, spec.tied_share)):
+            for _ in range(_share(spec.rows, TIED_SHARE)):
                 u = old_users[int(rng.integers(len(old_users)))]
                 rows.append(event(max_ts, u, EVENT_TYPES[int(rng.integers(len(EVENT_TYPES)))]))
                 kinds["tied"] += 1
-        late_hi = lo - spec.window_days * DAY_US - spec.late_margin_h * HOUR_US
+        late_hi = lo - WINDOW_DAYS * DAY_US - LATE_MARGIN_H * HOUR_US
         if late_hi > T0_US:
             old_users = sorted(seen_users)
-            for _ in range(_share(spec.rows, spec.late_share)):
+            for _ in range(_share(spec.rows, LATE_SHARE)):
                 u = old_users[int(rng.integers(len(old_users)))]
                 rows.append(event(int(rng.integers(T0_US, late_hi)), u, EVENT_TYPES[int(rng.integers(len(EVENT_TYPES)))]))
                 kinds["late"] += 1
-        n_replay = _share(spec.rows, spec.replay_share)
+        n_replay = _share(spec.rows, REPLAY_SHARE)
         pool_prev = prev_rows if prev_rows else rows
         for i in range(n_replay):
             src = pool_prev if i % 2 == 0 else rows
@@ -175,7 +195,7 @@ def cdc_arrivals(seed: int, spec: CdcSpec) -> tuple[list[pa.Table], dict]:
         prev_rows = list(rows)
         tables.append(_events_table(rows))
         planted.append(kinds)
-    return tables, {"spec": asdict(spec), "arrivals": planted, "event_ids": next_id}
+    return tables, {"spec": {**asdict(spec), **CDC_SHARES}, "arrivals": planted, "event_ids": next_id}
 
 
 def _events_table(rows: list[dict]) -> pa.Table:
@@ -234,11 +254,11 @@ def curation_corpus(seed: int, spec: CurationSpec) -> tuple[pa.Table, pa.Table, 
     rng = np.random.default_rng(seed)
     texts = [_text(rng) for _ in range(spec.docs)]
     exact_pairs, near_pairs = [], []
-    for _ in range(_share(spec.docs, spec.exact_dup_share)):
+    for _ in range(_share(spec.docs, EXACT_DUP_SHARE)):
         base = int(rng.integers(spec.docs))
         exact_pairs.append((base, len(texts)))
         texts.append(texts[base])
-    for _ in range(_share(spec.docs, spec.near_dup_share)):
+    for _ in range(_share(spec.docs, NEAR_DUP_SHARE)):
         base = int(rng.integers(spec.docs))
         near_pairs.append((base, len(texts)))
         texts.append(_edit(rng, texts[base]))
@@ -253,15 +273,15 @@ def curation_corpus(seed: int, spec: CurationSpec) -> tuple[pa.Table, pa.Table, 
         }
     )
 
-    centres = rng.normal(0.0, 1.0, size=(spec.clusters, spec.dim))
-    label = rng.integers(spec.clusters, size=spec.vectors)
-    vecs = centres[label] + rng.normal(0.0, 0.45, size=(spec.vectors, spec.dim))
+    centres = rng.normal(0.0, 1.0, size=(CLUSTERS, DIM))
+    label = rng.integers(CLUSTERS, size=spec.vectors)
+    vecs = centres[label] + rng.normal(0.0, 0.45, size=(spec.vectors, DIM))
     vec_pairs = []
     extra, extra_label = [], []
-    for _ in range(_share(spec.vectors, spec.near_dup_vec_share)):
+    for _ in range(_share(spec.vectors, NEAR_DUP_VEC_SHARE)):
         base = int(rng.integers(spec.vectors))
         vec_pairs.append((base, spec.vectors + len(extra)))
-        extra.append(vecs[base] + rng.normal(0.0, 0.05, size=spec.dim))
+        extra.append(vecs[base] + rng.normal(0.0, 0.05, size=DIM))
         extra_label.append(label[base])
     if extra:
         vecs = np.vstack([vecs, np.array(extra)])
@@ -275,7 +295,7 @@ def curation_corpus(seed: int, spec: CurationSpec) -> tuple[pa.Table, pa.Table, 
         }
     )
     planted = {
-        "spec": asdict(spec),
+        "spec": {**asdict(spec), **CURATION_SHARES},
         "documents": n,
         "vectors": len(vecs),
         "exact_pairs": exact_pairs,
@@ -303,11 +323,12 @@ def write_cdc(out_dir: str, seed: int, spec: CdcSpec) -> dict:
     return planted
 
 
-# Each workload's inputs. ``stream_cdc`` lands 1 + floor(seconds / 3.3)
-# arrivals; five is its count at the benchmark's 15 s run length.
+# Each workload's inputs. ``stream_cdc`` takes its arrival count from the
+# run length (one per interval of its open-loop schedule), so the default
+# count here only sizes the standalone view.
 WORKLOAD_SPECS = {
-    "cdc_medallion": CdcSpec(arrivals=4),
-    "stream_cdc": CdcSpec(arrivals=5, rows=500),
+    "cdc_medallion": CdcSpec(),
+    "stream_cdc": CdcSpec(rows=500),
     "llm_curation": CurationSpec(),
 }
 

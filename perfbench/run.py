@@ -1,9 +1,9 @@
 """Benchmark entry point: one workload, one seed, one measured run.
 
-    python3 perfbench/run.py --workload cdc_medallion --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload cdc_medallion --seed 1 --seconds 12 --trace 0
 
-Set-up is the session start plus a warm-up pass on small inputs derived
-from the seed that takes every code path the measured phase takes. The
+Set-up is the session start plus a warm-up on small inputs derived from
+the seed that takes every code path the measured phase takes. The
 measured phase then runs a fixed amount of the workload sized to take about
 ``--seconds``, checks every result against DuckDB,
 prints a metric table, writes a sidecar JSON under ``perfbench/out`` and
@@ -37,7 +37,7 @@ def set_up(mod, work: Path, seed: int):
     """Start the session (launching the JVM) and warm it up once.
 
     One set-up per run: a second one (session restart plus warm-up) would
-    add 4-8 s to every run of about 35 s."""
+    add 15-25 s to every run of 35-45 s."""
     t0 = time.perf_counter()
     spark = harness.start_session(work)
     t1 = time.perf_counter()

@@ -61,7 +61,7 @@ def smoke(spark, work: Path) -> None:
 
     cdc.SPEC = CdcSpec(arrivals=2, rows=100)
     curation.SPEC = CurationSpec(docs=60, vectors=80, queries=10, query_lo=20)
-    stream.SPEC = CdcSpec(arrivals=3, rows=100)
+    stream.SPEC = CdcSpec(rows=100)
     setup = {"setup_s": 1.0, "start_s": 0.5, "warmup_s": 0.5}
     for mod, seconds in ((cdc, 0), (curation, 0), (stream, 2 * stream.INTERVAL_S)):
         name = mod.__name__
