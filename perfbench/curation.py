@@ -34,6 +34,8 @@ import duckdb
 from gen import WORKLOAD_SPECS, CurationSpec, write_curation
 
 SPEC = WORKLOAD_SPECS["llm_curation"]
+# A full-size warm-up pass would add 3-5 s to every set-up and still
+# leave the first measured pass the slowest, so the warm-up stays small.
 WARMUP_SPEC = CurationSpec(docs=60, vectors=80, queries=10, query_lo=20)
 REGISTRY = ("corpus_curation", "ann_ivf_index_persisted")
 ANN_K = 10

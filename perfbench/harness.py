@@ -8,11 +8,14 @@ under ``perfbench/out``.
 
 from __future__ import annotations
 
+import ctypes
 import math
 import os
 import resource
 import shutil
+import signal
 import statistics
+import subprocess
 import sys
 import tempfile
 import time
@@ -27,7 +30,14 @@ OUT = BENCH_DIR / "out"
 
 def prepare_process(tag: str) -> Path:
     """Fresh scratch root for this run; points every temp path at it and
-    makes the engine package importable here and in Python workers."""
+    makes the engine package importable here and in Python workers.
+
+    This process also becomes the subreaper of everything it starts, so
+    a Python worker whose JVM has exited is re-parented here and
+    :func:`stop_processes` can wait for it; SIGTERM unwinds through the
+    ``finally`` blocks that stop them."""
+    _become_subreaper()
+    signal.signal(signal.SIGTERM, _exit_on_signal)
     os.environ["TZ"] = "UTC"  # naive datetimes crossing py4j mean UTC
     time.tzset()
     work = WORK / f"{tag}-{os.getpid()}"
@@ -87,6 +97,80 @@ def start_session(work: Path):
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+def stop_processes(grace_s: float = 30.0) -> None:
+    """Stop the Spark session and its JVM, then wait until every process
+    started from here has ended, killing what outlives ``grace_s``.
+
+    ``SparkSession.stop`` leaves the JVM running until this process exits
+    and its stdin pipe closes; closing the pipe here makes it exit now."""
+    from pyspark import SparkContext
+
+    try:
+        if SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    finally:
+        gateway, SparkContext._gateway, SparkContext._jvm = SparkContext._gateway, None, None
+        proc = getattr(gateway, "proc", None)
+        if gateway is not None:
+            gateway.shutdown()
+        if proc is not None:
+            if proc.stdin is not None:
+                proc.stdin.close()  # the gateway server exits on EOF
+            try:
+                proc.wait(timeout=grace_s)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        reap_children(grace_s)
+
+
+def reap_children(grace_s: float) -> None:
+    """Wait for every child of this process (orphaned descendants
+    included, as their subreaper) to end; SIGKILL those left after
+    ``grace_s``."""
+    deadline = time.monotonic() + grace_s
+    while True:
+        kids = _children()
+        if not kids:
+            return
+        late = time.monotonic() > deadline
+        for pid in kids:
+            try:
+                if late:
+                    os.kill(pid, signal.SIGKILL)
+                os.waitpid(pid, 0 if late else os.WNOHANG)
+            except (ProcessLookupError, ChildProcessError):
+                pass
+        time.sleep(0.05)
+
+
+def _children() -> list[int]:
+    me, kids = os.getpid(), []
+    for entry in os.scandir("/proc"):
+        if not entry.name.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry.name}/stat") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        if int(stat.rpartition(")")[2].split()[1]) == me:
+            kids.append(int(entry.name))
+    return kids
+
+
+def _become_subreaper() -> None:
+    PR_SET_CHILD_SUBREAPER = 36
+    try:
+        ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+    except (OSError, AttributeError):
+        pass
+
+
+def _exit_on_signal(signum, frame):
+    raise SystemExit(128 + signum)
 
 
 def reset_session_state(spark) -> None:

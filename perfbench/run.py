@@ -68,15 +68,15 @@ def main() -> int:
     t_run = time.perf_counter()
     try:
         spark, setup = set_up(mod, work, args.seed)
-        try:
-            tracer = harness.Tracer(spark, bool(args.trace))
-            res = mod.measure(spark, work, args.seed, args.seconds, tracer, bool(args.trace))
-            rss = harness.peak_rss_mb(spark)
-            counters = tracer.layer_counters()
-        finally:
-            spark.stop()
+        tracer = harness.Tracer(spark, bool(args.trace))
+        res = mod.measure(spark, work, args.seed, args.seconds, tracer, bool(args.trace))
+        rss = harness.peak_rss_mb(spark)
+        counters = tracer.layer_counters()
     finally:
-        harness.cleanup(work)
+        try:
+            harness.stop_processes()
+        finally:
+            harness.cleanup(work)
     steal = harness.steal_pct(steal0, harness.cpu_stat())
     report = mod.report(res, setup, rss, counters, tracer)
     report["setup"] = setup

@@ -115,13 +115,13 @@ def main() -> int:
     try:
         determinism(work)
         spark = harness.start_session(work)
-        try:
-            corrupted_gold(spark, work)
-            smoke(spark, work)
-        finally:
-            spark.stop()
+        corrupted_gold(spark, work)
+        smoke(spark, work)
     finally:
-        harness.cleanup(work)
+        try:
+            harness.stop_processes()
+        finally:
+            harness.cleanup(work)
     print("all self-tests passed")
     return 0
 

@@ -30,10 +30,11 @@ import duckdb
 from cdc import DIMS, expected_from_bronze, latest_per_key, load_arrivals, mismatches, silver_transform
 from gen import WORKLOAD_SPECS, CdcSpec, arrival_name, cdc_arrivals, write_parquet
 
-# Open-loop schedule. The micro-batch that consumes one arrival takes about
-# 2.2 s on 4 cores at the seed, so one arrival every 3.3 s keeps the
-# backlog (arrivals still uncommitted when the next one would be due) at
-# zero with headroom for a slow batch.
+# Open-loop schedule. An arrival is committed about 1.2 s after it lands
+# on 4 cores at the seed, and up to 2.5 s when the host is slow, so one
+# arrival every 3.3 s keeps the backlog (arrivals still uncommitted when
+# the next one would be due) at zero. At 2.2 s a slow host made arrivals
+# queue, and the latency then grew with the arrival index.
 INTERVAL_S = 3.3
 SPEC = WORKLOAD_SPECS["stream_cdc"]
 WARMUP_SPEC = CdcSpec(arrivals=2, rows=100)
@@ -93,7 +94,7 @@ class StreamRun:
         self.tracer = tracer
         self.committed: dict[int, float] = {}  # arrival -> commit time
         self.batch_of: dict[int, int] = {}  # arrival -> micro-batch
-        self.apply_s = 0.0  # summed foreachBatch time of batches with input
+        self.applies: list[tuple[list[int], float]] = []  # (arrivals, foreachBatch s)
         self.queries = []
 
     def land(self, k: int, table) -> None:
@@ -118,9 +119,9 @@ class StreamRun:
             finally:
                 batch.unpersist()
         now = time.perf_counter()
-        self.apply_s += now - t0
-        for f in files:
-            k = int(f.split("-")[1].split(".")[0])
+        ks = [int(f.split("-")[1].split(".")[0]) for f in files]
+        self.applies.append((ks, now - t0))
+        for k in ks:
             self.committed[k] = now
             self.batch_of[k] = epoch
 
@@ -277,9 +278,10 @@ def measure(spark, work: Path, seed: int, seconds: float, tracer, traced: bool) 
     chk = check_stream(res["run"], n)
     bad = sum(chk["mismatches"].values()) > 0 or chk["committed"] != n
     lat = res["latencies"]
-    rows = sum(planted["arrivals"][k]["new"] for k in lat)
-    # Engine time, not the schedule: the generator fixes the run's wall.
-    apply_s = res["run"].apply_s
+    # Engine time, not the schedule (the generator fixes the run's wall):
+    # new rows over foreachBatch time, the median over micro-batches.
+    applies = res["run"].applies
+    rates = [sum(planted["arrivals"][k]["new"] for k in ks) / dt for ks, dt in applies]
     return {
         "latencies": [lat[k] for k in sorted(lat)],
         "untraced": [lat[k] for k in sorted(lat) if trace_from is not None and k < trace_from],
@@ -288,8 +290,8 @@ def measure(spark, work: Path, seed: int, seconds: float, tracer, traced: bool) 
         "failed": n if bad else 0,
         "checks": [chk],
         "planted": planted,
-        "rows_per_s": rows / apply_s,
-        "apply_s": apply_s,
+        "rows_per_s": statistics.median(rates),
+        "apply_s": [dt for _, dt in applies],
         "backlog_end": res["backlog_end"],
         "generator_late_max_s": res["generator_late_max_s"],
         "progress": progress,
