@@ -10,10 +10,8 @@ with join-based set algebra (SURVEY §7 step 4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-from incremental_data_pipeline_spark.operators.cdc import new_rows
 
 # Above this many rows, surrogate-key assignment auto-selects the
 # range-partitioned prefix-sum path instead of one global window task.
@@ -102,10 +100,13 @@ def assign_surrogate_keys(
     df: DataFrame,
     key_col: str,
     order_by: list[str],
-    base: int = 0,
+    base: int | Column = 0,
     scalable: bool | None = None,
 ) -> DataFrame:
     """key = base + row_number() ordered by the natural key.
+
+    ``base`` is an int or a Column of ``df`` (``build_dim`` passes the
+    existing dim's max key, joined in as a one-row aggregate).
 
     Reference: gold_dim_branch.py:139-146 (`lit(max)+row_number()` over a
     global Window) and gold_dim_model.py:157-158 (`max +
@@ -161,12 +162,14 @@ def assign_surrogate_keys(
             f"{sorted(clashes)} collide with assign_surrogate_keys "
             "internals ('__bkt', '__rn', '__off'); rename them first"
         )
+    if not isinstance(base, Column):
+        base = F.lit(base)
     if scalable is None:
         probe = df.limit(SCALABLE_KEY_THRESHOLD + 1).count()
         scalable = probe > SCALABLE_KEY_THRESHOLD
     if not scalable:
         w = Window.orderBy(*order_by)
-        return df.withColumn(key_col, (F.lit(base) + F.row_number().over(w)).cast("long"))
+        return df.withColumn(key_col, (base + F.row_number().over(w)).cast("long"))
 
     # Scalable path: bucket rows by driver-frozen range boundaries (so
     # bucket order IS global order), number within buckets, then add
@@ -192,7 +195,7 @@ def assign_surrogate_keys(
                 order_by,
             )
         w = Window.orderBy(*order_by)
-        return df.withColumn(key_col, (F.lit(base) + F.row_number().over(w)).cast("long"))
+        return df.withColumn(key_col, (base + F.row_number().over(w)).cast("long"))
     bucketed = df.withColumn("__bkt", _bucket_expr(df, order_by, boundaries))
     wp = Window.partitionBy("__bkt").orderBy(*order_by)
     numbered = bucketed.withColumn("__rn", F.row_number().over(wp))
@@ -201,7 +204,7 @@ def assign_surrogate_keys(
     offsets = counts.withColumn("__off", F.coalesce(F.sum("__cnt").over(woff), F.lit(0)))
     return (
         numbered.join(F.broadcast(offsets.select("__bkt", "__off")), "__bkt")
-        .withColumn(key_col, (F.lit(base) + F.col("__off") + F.col("__rn")).cast("long"))
+        .withColumn(key_col, (base + F.col("__off") + F.col("__rn")).cast("long"))
         .drop("__bkt", "__rn", "__off")
     )
 
@@ -219,11 +222,26 @@ def build_dim(
 
     1. project natural key + attributes, dropDuplicates on the natural key
        (fixes SURVEY §2.9 #2);
-    2. split new vs existing natural keys (CDC anti-join, J1);
-    3. new keys get ``max(existing surrogate) + row_number`` (dense, §2.9 #3);
-    4. existing keys keep their surrogate, attributes refreshed from source
-       (SCD1 update-all semantics, merge on NATURAL key — fixes §2.9 #5);
-    5. union with untouched existing rows.
+    2. one full-outer join of ``existing`` with that source on the natural
+       key (merge on the NATURAL key — fixes §2.9 #5). SQL NULL semantics:
+       a key with a NULL part never matches, so such a dim row is kept and
+       such a source row is inserted;
+    3. attributes come from the source wherever the key is in the source
+       (an explicit in-source flag, not ``coalesce``, so a NULL source
+       attribute still overwrites — SCD1 update-all); existing keys keep
+       their surrogate;
+    4. keys absent from ``existing`` get ``base + row_number()`` ordered by
+       the natural key, where ``base`` is max(existing surrogate), or 0
+       for an empty dim (dense, §2.9 #3). ``base`` is an aggregate inside
+       the same plan, never a driver-side scalar.
+
+    The new keys go through ``assign_surrogate_keys`` with
+    ``scalable_keys`` (one window over the new keys only when ``False``;
+    range-bucketed, with its probe and sample jobs, otherwise), ``base``
+    joined in as a broadcast one-row aggregate of ``existing``; the matched
+    and untouched rows are unioned back from the same join. With
+    ``scalable_keys=False`` building the plan submits no job: all of its
+    work runs in the jobs of the action that consumes it.
     """
     src = source.select(*natural_keys, *attrs).dropDuplicates(natural_keys)
     if existing is None:
@@ -231,21 +249,35 @@ def build_dim(
             surrogate_key, *natural_keys, *attrs
         )
 
-    max_key = existing.agg(F.max(surrogate_key)).first()[0] or 0  # A2 scalar agg
-    inserts = assign_surrogate_keys(
-        new_rows(src, existing, natural_keys), surrogate_key, natural_keys, max_key, scalable_keys
+    joined = existing.select(
+        surrogate_key, *natural_keys, *attrs, F.lit(True).alias("__in_dim")
+    ).join(
+        src.select(
+            *natural_keys,
+            *[F.col(a).alias(f"__s_{a}") for a in attrs],
+            F.lit(True).alias("__in_src"),
+        ),
+        natural_keys,
+        "full_outer",
     )
-    # SCD1 update: refreshed attrs for keys present in both; surrogate kept.
-    updates = existing.select(surrogate_key, *natural_keys).join(
-        src, natural_keys, "inner"
+    in_dim = F.col("__in_dim").isNotNull()
+    in_src = F.col("__in_src").isNotNull()
+    merged = joined.select(
+        surrogate_key,
+        *natural_keys,
+        *[F.when(in_src, F.col(f"__s_{a}")).otherwise(F.col(a)).alias(a) for a in attrs],
+        in_dim.alias("__in_dim"),
     )
-    untouched = existing.join(src.select(*natural_keys), natural_keys, "left_anti")
     cols = [surrogate_key, *natural_keys, *attrs]
-    return (
-        untouched.select(*cols)
-        .unionByName(updates.select(*cols))
-        .unionByName(inserts.select(*cols))
+    base = existing.agg(F.coalesce(F.max(surrogate_key), F.lit(0)).alias("__base"))
+    inserts = assign_surrogate_keys(
+        merged.filter(~F.col("__in_dim")).drop(surrogate_key).crossJoin(F.broadcast(base)),
+        surrogate_key,
+        natural_keys,
+        F.col("__base"),
+        scalable_keys,
     )
+    return merged.filter(F.col("__in_dim")).select(*cols).unionByName(inserts.select(*cols))
 
 
 def upsert_scd1(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:

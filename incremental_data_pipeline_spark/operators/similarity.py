@@ -1085,9 +1085,58 @@ def ivf_index_upsert(
         batch.unpersist()
 
 
+def _check_index_schema(path: str, schema) -> None:
+    """Fail if the on-disk index's columns differ from ``schema`` (less its
+    ``cell`` partition column).
+
+    The merge reads the index with ``schema`` imposed, so a drifted index
+    (a renamed, added or retyped column) would be silently null-filled
+    and written back. One parquet footer, read on the driver with
+    pyarrow, settles it without a Spark job. The Spark schema is taken
+    from the footer's ``org.apache.spark.sql.parquet.row.metadata`` key;
+    a file written by another tool carries none, so only its column
+    names are compared."""
+    import glob
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    part = next(glob.iglob(os.path.join(glob.escape(path), "cell=*", "*.parquet")), None)
+    if part is None:
+        return  # no data file yet: nothing to drift from
+    footer = pq.read_schema(part)
+    spark_meta = (footer.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if spark_meta is not None:
+        on_disk = {
+            f.name: f.dataType.simpleString()
+            for f in StructType.fromJson(json.loads(spark_meta)).fields
+        }
+    else:
+        on_disk = dict.fromkeys(footer.names)
+    want = {
+        f.name: f.dataType.simpleString() for f in schema.fields if f.name != "cell"
+    }
+    differing = sorted(
+        name
+        for name in on_disk.keys() | want.keys()
+        if name not in on_disk
+        or name not in want
+        or (on_disk[name] is not None and on_disk[name] != want[name])
+    )
+    if differing:
+        detail = ", ".join(
+            f"{n}: index {on_disk.get(n, 'absent')} vs batch {want.get(n, 'absent')}"
+            for n in differing
+        )
+        raise ValueError(f"IVF index at {path} has drifted from the batch schema ({detail})")
+
+
 def _ivf_upsert_merge(
     spark, batch: DataFrame, path: str, id_col: str, allow_moves: bool
 ) -> None:
+    _check_index_schema(path, batch.schema)
     batch_cells = {r["cell"] for r in batch.select("cell").distinct().collect()}
     touched = set(batch_cells)
     emptied: set = set()

@@ -17,10 +17,12 @@ Orchestration order mirrors docs/gold_layer.PNG: silver → dims → fact.
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from incremental_data_pipeline_spark.operators.scd import build_dim, build_fact
 from incremental_data_pipeline_spark.sources.sinks import (
@@ -35,6 +37,11 @@ class MedallionPipeline:
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir
+        # path -> (schema written, directory identity right after the swap)
+        # for every table this pipeline wrote. The dim builds run on a
+        # thread pool (medallion_e2e), hence the lock.
+        self._written: dict[str, tuple[StructType, tuple[int, int]]] = {}
+        self._written_lock = threading.Lock()
 
     # -- table registry (replaces the reference's cars_catalog.{silver,gold}) --
 
@@ -46,7 +53,25 @@ class MedallionPipeline:
         return os.path.exists(self.path(layer, table))
 
     def read(self, layer: str, table: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(layer, table))
+        """Scan a table. A table this pipeline swapped in, and that is still
+        the directory it swapped in, is read with the schema it wrote:
+        inferring it again would cost a footer-reading job per read. Any
+        other directory (never written here, or replaced since) is
+        inferred."""
+        path = self.path(layer, table)
+        with self._written_lock:
+            written = self._written.get(path)
+        if written is not None and written[1] == _identity(path):
+            return self.spark.read.schema(written[0]).parquet(path)
+        return self.spark.read.parquet(path)
+
+    def _overwrite(self, df: DataFrame, layer: str, table: str) -> DataFrame:
+        """Atomically replace a table with ``df`` and return the new table."""
+        path = self.path(layer, table)
+        atomic_overwrite(df, path)
+        with self._written_lock:
+            self._written[path] = (df.schema, _identity(path))
+        return self.read(layer, table)
 
     # -- bronze: incremental CDC ingest --
 
@@ -107,9 +132,7 @@ class MedallionPipeline:
         self, table: str, transform: Callable[[DataFrame], DataFrame], source_table: str | None = None
     ) -> DataFrame:
         src = self.read("bronze", source_table or table)
-        out = transform(src)
-        atomic_overwrite(out, self.path("silver", table))
-        return self.read("silver", table)
+        return self._overwrite(transform(src), "silver", table)
 
     # -- gold: SCD1 dims + fact --
 
@@ -126,6 +149,14 @@ class MedallionPipeline:
         for every dimension (replaces 4 copy-pasted notebooks and their
         divergent key generators — SURVEY §2.9 #1-#5).
 
+        An incremental build is one lazy plan written once: the existing
+        dim is read with the schema this pipeline wrote (no inference job),
+        ``build_dim`` joins it with ``source`` once and takes the max key
+        inside the plan (no driver-side ``max()``), and the result is read
+        back with its written schema. Per batch a dim costs the jobs of
+        its write and nothing else: no inference read, no driver-side
+        aggregate and no read-back job.
+
         ``scalable_keys=False`` here (vs the generic operators' size-probe
         auto-default): a gold DIMENSION is small by definition — dims stay
         dimension-sized even at 100 TB fact scale — so per-batch probe jobs
@@ -134,8 +165,7 @@ class MedallionPipeline:
         ``True``."""
         existing = self.read("gold", table) if self.exists("gold", table) else None
         dim = build_dim(source, natural_keys, attrs, surrogate_key, existing, scalable_keys)
-        atomic_overwrite(dim, self.path("gold", table))
-        return self.read("gold", table)
+        return self._overwrite(dim, "gold", table)
 
     def build_gold_fact(
         self,
@@ -144,6 +174,14 @@ class MedallionPipeline:
         dims: dict[str, tuple[DataFrame, dict[str, str]]],
         measures: list[str],
     ) -> DataFrame:
-        fact = build_fact(base, dims, measures)
-        atomic_overwrite(fact, self.path("gold", table))
-        return self.read("gold", table)
+        return self._overwrite(build_fact(base, dims, measures), "gold", table)
+
+
+def _identity(path: str) -> tuple[int, int] | None:
+    """Inode and mtime of a directory: a swap or an in-place write changes
+    at least one of them."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_ino, st.st_mtime_ns

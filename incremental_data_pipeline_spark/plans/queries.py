@@ -13769,6 +13769,9 @@ def bucketed_join_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Independent writes to distinct tables: submit both from a 2-thread
     # pool so the orders write back-fills the lineitem write's task tail
     # (guide §2.6); pool.map re-raises either write's failure.
+    # The two saveAsTable calls also run their CREATE TABLE concurrently.
+    # That assumes the in-memory session catalog: a Hive metastore on
+    # embedded Derby is known to fail intermittently under concurrent DDL.
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as pool:

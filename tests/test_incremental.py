@@ -106,6 +106,99 @@ def test_scd1_dim_upsert_refreshes_attrs_and_keeps_keys(spark, tmp_path):
     assert sorted(tuple(r) for r in dim3.collect()) == dim2_rows
 
 
+def _jobs_of(spark, fn):
+    """Run ``fn`` in a fresh job group and return its result with the call
+    sites of the jobs it submitted: the status tracker's ids for the
+    group, read once the listener bus has drained."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    return out, [store.job(j).name() for j in sorted(sc.statusTracker().getJobIdsForGroup(group))]
+
+
+def test_incremental_dim_build_runs_no_job_before_its_write(spark, tmp_path):
+    """An incremental SCD1 dim is one lazy plan: reading the existing dim
+    and building the merge submit no job (no driver-side max(), no schema
+    inference of a table the pipeline wrote), the whole build submits only
+    its write's jobs, and reading the result back submits none."""
+    from incremental_data_pipeline_spark.operators.scd import build_dim
+
+    pipe = MedallionPipeline(spark, str(tmp_path))
+    cust = load_table(spark, SF_DIR, "customer")
+    args = (["c_custkey"], ["c_name", "c_mktsegment"], "dim_customer_key")
+    pipe.build_gold_dim("dim_customer", cust.filter(F.col("c_custkey") <= 100), *args)
+    src = cust.filter(F.col("c_custkey") > 50)  # 50 updates, the rest inserts
+
+    _, planned = _jobs_of(
+        spark,
+        lambda: build_dim(src, *args, pipe.read("gold", "dim_customer"), scalable_keys=False),
+    )
+    assert planned == []
+    dim, built = _jobs_of(spark, lambda: pipe.build_gold_dim("dim_customer", src, *args))
+    assert built and not [name for name in built if "scd.py" in name], built
+    _, read_back = _jobs_of(spark, lambda: pipe.read("gold", "dim_customer"))
+    assert read_back == []
+    assert dim.count() == cust.count()
+
+
+def test_read_reinfers_a_table_replaced_outside_the_pipeline(spark, tmp_path):
+    """The written-schema shortcut holds only while the directory is the
+    one the pipeline swapped in: a version with an extra column, swapped
+    in by another writer, is read with that column."""
+    import os
+    import shutil
+
+    pipe = MedallionPipeline(spark, str(tmp_path))
+    cust = load_table(spark, SF_DIR, "customer").filter(F.col("c_custkey") <= 100)
+    pipe.build_gold_dim("dim_customer", cust, ["c_custkey"], ["c_name"], "dim_customer_key")
+    path = pipe.path("gold", "dim_customer")
+    spark.read.parquet(path).withColumn("c_extra", F.lit("x")).write.parquet(path + ".new")
+    shutil.rmtree(path)
+    os.rename(path + ".new", path)
+
+    got = pipe.read("gold", "dim_customer")
+    assert "c_extra" in got.columns
+    assert got.filter(F.col("c_extra") == "x").count() == cust.count()
+
+
+def test_written_schemas_survive_concurrent_writers(spark, tmp_path):
+    """More writer threads than cores, with a short switch interval: every
+    table written through the pipeline is then read back with its own
+    schema and without a job, so no thread's record was lost or crossed."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    pipe = MedallionPipeline(spark, str(tmp_path))
+    n = 8
+
+    def write(i: int):
+        df = spark.range(3).withColumn(f"c{i}", F.lit(i))
+        return pipe.build_gold_fact(f"t{i}", df, {}, ["id", f"c{i}"])
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=n) as pool:
+            futures = [pool.submit(write, i) for i in range(n)]
+            for f in futures:
+                f.result(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+
+    tables, jobs = _jobs_of(spark, lambda: [pipe.read("gold", f"t{i}") for i in range(n)])
+    assert jobs == []
+    assert [t.columns for t in tables] == [["id", f"c{i}"] for i in range(n)]
+
+
 def test_fact_fk_resolution_with_late_dim(spark, tmp_path):
     """Fact rows joining a missing dim member keep a NULL FK (reference
     left-join behavior, gold_fact.py:34-38) instead of being dropped."""

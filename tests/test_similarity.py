@@ -546,6 +546,40 @@ def test_ivf_index_upsert_allow_moves_drops_emptied_cell(spark, tmp_path):
     assert idx.select("vec_id").distinct().count() == corpus.count()
 
 
+def test_ivf_index_upsert_rejects_drifted_index(spark, tmp_path):
+    """The merge reads the index with the batch's schema imposed, so a
+    drifted index (a column renamed, one added) would be null-filled and
+    written back. The upsert must fail instead, naming the columns, and
+    leave the index as it was; an index that matches still upserts."""
+    import pytest
+
+    from incremental_data_pipeline_spark.operators import similarity as sim
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    codebook = sim.centroid_codebook(emb, nlist=8)
+    good = str(tmp_path / "idx")
+    sim.ivf_index_build(emb, codebook, good)
+    drifted = str(tmp_path / "idx_drifted")
+    (
+        spark.read.parquet(good)
+        .withColumnRenamed("cv", "cv_old")
+        .withColumn("tag", F.lit("x"))
+        .write.partitionBy("cell")
+        .parquet(drifted)
+    )
+    batch = emb.filter(F.col("vec_id") < 3)
+
+    with pytest.raises(ValueError, match="drifted") as err:
+        sim.ivf_index_upsert(spark, batch, codebook, drifted)
+    for name in ("cv", "cv_old", "tag"):
+        assert f"{name}:" in str(err.value)
+    assert spark.read.parquet(drifted).count() == emb.count()
+    assert "cv" not in spark.read.parquet(drifted).columns
+
+    sim.ivf_index_upsert(spark, batch, codebook, good)
+    assert spark.read.parquet(good).count() == emb.count()
+
+
 def test_jl_projection_exact_and_distortion_concentrates(spark):
     from incremental_data_pipeline_spark.operators import similarity as sim
     from incremental_data_pipeline_spark.sources.readers import load_table
